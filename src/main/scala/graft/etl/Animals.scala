@@ -69,19 +69,7 @@ object AnimalsTransform {
     * invalid-born_at counter (pipeline.py:66,82-83).
     */
   def transform(details: DataFrame, asOf: Column): DataFrame =
-    details
-      .withColumn("born_iso", epochToIso8601Utc(col("born_at"), asOf))
-      .observe(
-        "quality",
-        count(when(col("born_at").isNotNull && col("born_iso").isNull, 1)).as("invalid_born_at"),
-        count(lit(1)).as("rows")
-      )
-      .select(
-        col("id").cast(LongType).as("id"),
-        col("name"),
-        splitFriends(col("friends")).as("friends"),
-        col("born_iso").as("born_at")
-      )
+    transformVia(details, asOf)(metrics => _.observe("quality", metrics.head, metrics.tail: _*))
 
   /** Error-row filter (P2): drop rows whose keyed lookup failed (null id). */
   def dropFailedLookups(details: DataFrame): DataFrame =
@@ -96,17 +84,29 @@ object AnimalsTransform {
       asOf: Column,
       obs: org.apache.spark.sql.Observation
   ): DataFrame =
-    details
-      .withColumn("born_iso", epochToIso8601Utc(col("born_at"), asOf))
-      .observe(
-        obs,
-        count(when(col("born_at").isNotNull && col("born_iso").isNull, 1)).as("invalid_born_at"),
-        count(lit(1)).as("rows")
-      )
+    transformVia(details, asOf)(metrics => _.observe(obs, metrics.head, metrics.tail: _*))
+
+  /** born_at goes epoch → micros → checked timestamp → ISO string in three
+    * stacked projections. Each layer's result feeds the next one several
+    * times, so CollapseProject keeps them apart and every row computes each
+    * step once; inlined, the ISO string repeats the epoch conversion 16×. */
+  private def transformVia(details: DataFrame, asOf: Column)(
+      observe: Seq[Column] => DataFrame => DataFrame
+  ): DataFrame = {
+    val born = details
+      .withColumn("born_us", epochToMicros(col("born_at")))
+      .withColumn("born_ts", normalizeMicros(col("born_us"), asOf))
+      .withColumn("born_iso", formatIsoUtc(col("born_ts")))
+    val quality = Seq(
+      count(when(col("born_at").isNotNull && col("born_iso").isNull, 1)).as("invalid_born_at"),
+      count(lit(1)).as("rows")
+    )
+    observe(quality)(born)
       .select(
         col("id").cast(LongType).as("id"),
         col("name"),
         splitFriends(col("friends")).as("friends"),
         col("born_iso").as("born_at")
       )
+  }
 }

@@ -10,7 +10,8 @@ import org.apache.spark.sql.types._
   *
   * Semantics mirror `/root/reference/src/animals_etl/utils.py:14-54`:
   *  - splitFriends:      utils.py:14-18
-  *  - normalizeEpoch:    utils.py:20-48 (unit auto-detect by magnitude)
+  *  - normalizeEpoch:    utils.py:20-48 (unit auto-detect by magnitude),
+  *                       as epochToMicros then normalizeMicros
   *  - isValidIsoUtc:     utils.py:7,50-54
   */
 object FaunaFunctions {
@@ -58,8 +59,13 @@ object FaunaFunctions {
     * reference uses wall-clock `now`, which would break oracle
     * reproducibility (SURVEY.md §7.4).
     */
-  def normalizeEpoch(e: Column, asOf: Column): Column = {
-    val micros = epochToMicros(e)
+  def normalizeEpoch(e: Column, asOf: Column): Column = normalizeMicros(epochToMicros(e), asOf)
+
+  /** [[normalizeEpoch]]'s checks on microseconds already converted by
+    * [[epochToMicros]]. `micros` appears four times in the result, so pass
+    * a column reference, not the conversion itself, where that matters.
+    */
+  def normalizeMicros(micros: Column, asOf: Column): Column = {
     val ts = timestamp_micros(micros)
     when(micros.isNull || micros > lit(MaxEpochSeconds * 1000000L), lit(null).cast(TimestampType))
       .when(ts > asOf, lit(null).cast(TimestampType))

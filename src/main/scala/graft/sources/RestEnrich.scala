@@ -1,17 +1,20 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.types._
 
 /** Keyed point-lookup fan-out (S2,
   * `/root/reference/src/animals_etl/pipeline.py:31-55`): enrich an id column
   * by concurrent per-key GETs.
   *
-  * Spark mapping: `mapPartitions` with one retrying client per partition;
-  * in-flight request concurrency = number of simultaneously running tasks,
-  * so `repartition(k)` before this stage is the semaphore (R5). Failed
-  * lookups are logged and dropped (P2), matching the reference's
-  * error-tolerant semantics; the scan stays pipelined (no barrier).
+  * Spark mapping: a narrow `mapPartitions` with one retrying client per
+  * partition, looking its ids up one after another; in-flight request
+  * concurrency = number of simultaneously running partitions, so the
+  * partition count of the input is the semaphore (R5). The listing scan
+  * already plans `concurrency` partitions, so the pipeline runs [[lookup]]
+  * straight on it, in the scan's own tasks; [[details]] repartitions an
+  * arbitrary id frame first. Failed lookups are logged and dropped (P2),
+  * matching the reference's error-tolerant semantics.
   */
 object RestEnrich {
 
@@ -32,15 +35,20 @@ object RestEnrich {
       parallelism: Int = 8,
       policy: RetryPolicy = RetryPolicy(),
       timeouts: HttpTimeouts = HttpTimeouts()
-  ): DataFrame = {
-    val spark = ids.sparkSession
-    // RDD mapPartitions: genuine per-partition imperative logic (one live
-    // HTTP client per partition) — the one place RDDs beat Dataset ops.
-    val rdd = ids
+  ): DataFrame =
+    lookup(ids.select("id").repartition(math.max(1, parallelism)), transportClass, policy, timeouts)
+
+  /** [[details]] over `ids` as partitioned: one sequential lookup stream
+    * per partition, no exchange. */
+  def lookup(
+      ids: DataFrame,
+      transportClass: String,
+      policy: RetryPolicy = RetryPolicy(),
+      timeouts: HttpTimeouts = HttpTimeouts()
+  ): DataFrame =
+    ids
       .select("id")
-      .repartition(math.max(1, parallelism))
-      .rdd
-      .mapPartitions { it =>
+      .mapPartitions { (it: Iterator[Row]) =>
         val client = new RetryingHttpClient(HttpTransport.byName(transportClass), policy, timeouts)
         val part   = org.apache.spark.TaskContext.getPartitionId()
         var done   = 0L
@@ -64,7 +72,5 @@ object RestEnrich {
             System.err.println(s"[progress] partition $part fetched $done details…")
           res
         }
-      }
-    spark.createDataFrame(rdd, DetailSchema)
-  }
+      }(Encoders.row(DetailSchema))
 }

@@ -75,6 +75,36 @@ class PropertySpec extends AnyFunSuite {
     assert(rows.forall(_.isNullAt(0)))
   }
 
+  test("layered born_at transform equals epochToIso8601Utc on every epoch kind") {
+    import spark.implicits._
+    val secs = Gen.chooseNum(0L, 1700000000L)
+    val edge = MaxEpochSeconds
+    val epoch: Gen[Option[Long]] = Gen.frequency(
+      3 -> secs.map(Some(_)),
+      3 -> secs.flatMap(s => Gen.chooseNum(0L, 999L).map(f => Some(s * 1000L + f))),
+      3 -> secs.flatMap(s => Gen.chooseNum(0L, 999999L).map(f => Some(s * 1000000L + f))),
+      3 -> secs.flatMap(s => Gen.chooseNum(0L, 999999999L).map(f => Some(s * 1000000000L + f))),
+      2 -> Gen.chooseNum(Long.MinValue + 1, -1L).map(Some(_)),
+      2 -> Gen.chooseNum(1800000000L, 4000000000L).flatMap(s =>
+        Gen.oneOf(s, s * 1000L, s * 1000000L, s * 1000000000L).map(Some(_))),
+      1 -> Gen.const(None),
+      2 -> Gen.oneOf(edge - 1, edge, edge + 1, edge * 1000L, edge * 1000L + 999L, edge * 1000000L,
+        Long.MaxValue, 0L).map(Some(_))
+    )
+    val df = sample(epoch, 600).zipWithIndex
+      .map { case (e, i) => (i.toLong, s"a$i", "x, y", e) }
+      .toDF("id", "name", "friends", "born_at")
+    // 2026 rejects the year-9999 edge as future; the second cutoff keeps it
+    for (asOf <- Seq(lit("2026-01-01 00:00:00"), lit("9999-12-31 23:59:59")).map(_.cast("timestamp"))) {
+      val want = df.select(col("id"), epochToIso8601Utc(col("born_at"), asOf)).collect()
+        .map(r => r.getLong(0) -> Option(r.getString(1))).toMap
+      val got = graft.etl.AnimalsTransform.transform(df, asOf).select("id", "born_at").collect()
+        .map(r => r.getLong(0) -> Option(r.getString(1))).toMap
+      assert(got == want)
+      assert(want.values.exists(_.isDefined) && want.values.exists(_.isEmpty))
+    }
+  }
+
   test("topK aggregate matches the sort-based reference under repartition") {
     import org.apache.spark.sql.types.LongType
     import spark.implicits._
